@@ -64,13 +64,11 @@ from pyspark.sql import functions as F
 from webgraph_spark.algo.bfs import bfs_distances
 from webgraph_spark.algo.components import hash_min_components, renumber_by_size
 from webgraph_spark.algo.labelprop import label_propagation
-from webgraph_spark.algo.pagerank import (
-    pagerank,
-    pagerank_edges,
-    pagerank_weighted,
+from webgraph_spark.algo.pagerank import pagerank_edges, pagerank_weighted
+from webgraph_spark.algo.pagerank_block import (
+    pagerank_block,
     personalized_pagerank,
 )
-from webgraph_spark.algo.pagerank_block import pagerank_block
 from webgraph_spark.algo.triangles import (
     global_clustering_coefficient,
     local_clustering_coefficient,
@@ -913,9 +911,8 @@ def _q_pagerank_edges(spark, sf_dir):
 
 
 def _q_pagerank_csr(spark, sf_dir):
-    """Block-vector CSR kernel (the scale path); the row-state kernel
-    (:func:`webgraph_spark.algo.pagerank.pagerank`) stays differential-
-    tested in pytest and `pagerank_edges` covers the join/agg plan here."""
+    """Block-vector CSR kernel (the scale path); `pagerank_edges` covers
+    the join/agg plan here."""
     e = _edges(spark, sf_dir)
     csr = build_csr(e, num_blocks=8)
     res = pagerank_block(spark, csr, _nodes(e), alpha=ALPHA, tol=0.0, max_iter=PR_ITERS)

@@ -75,10 +75,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark(
-        app_name="check-entry",
-        master="local[16]",
-        shuffle_partitions=16,
-        extra_conf={"spark.ui.enabled": "false"},
+        app_name="check-entry", extra_conf={"spark.ui.enabled": "false"}
     )
     con = duckdb.connect()
     for t in TABLES:

@@ -150,6 +150,8 @@ def test_url2_normalize_column(spark):
         # genuine overflow (> 2^31-1) lands in the catch -> "no port"
         "http://a.test:1234567890/x": "http://a.test:1234567890/x",
         "http://a.test:9999999999/x": "http://a.test/x",
+        # zero padding past 10 digits still parses: parseInt("00000000443")
+        "http://a.test:00000000443/x": "http://a.test:443/x",
         "http://a.test./": "http://a.test/",
         "http://a.test/x#frag": "http://a.test/x",
         "http://a.test//x///y": "http://a.test/x/y",

@@ -1,405 +1,162 @@
 """Block-vector PageRank: rank state as per-block dense vectors.
 
-The row-state kernel (:func:`webgraph_spark.algo.pagerank.pagerank`) emits
-up to one contribution row per (block, dst) — ~m/2 rows per iteration on
-real graphs, and its update join exchanges the O(n) rank table three times
-per iteration. This variant keeps the ENTIRE rank state as one dense
-``array<double>`` per CSR block (covering the block's node-id range under
-the same degree-balanced cuts), so one iteration is:
+The rank state lives as one dense float64 vector per CSR block (covering the
+block's node-id range under the same degree-balanced cuts), next to the
+block's int32 out-degree and int8 teleport-set vectors, and runs on the
+shared block-fixpoint driver (:mod:`webgraph_spark.plans.blockiter`). One
+iteration is
 
-1. cogroup(csr_blocks, state) on block_id — the graph side is cached
-   pre-partitioned (never re-exchanged); the state side is B rows.
-   The kernel gathers src ranks by direct slot indexing (``id - lo``,
-   no searchsorted) and scatters contributions into ONE partial vector
-   per destination block: **B rows out per source block, B² rows per
-   iteration** instead of ~m/2. Sub-threshold-density pairs fall back to
-   (slots, vals) sparse arrays — still one row per block pair.
-2. shuffle those B² rows by dst_block (bytes ≈ n·8 when dense — the same
-   order as the state itself, independent of m).
-3. cogroup(partials, state) on block_id: reduce partial vectors, apply
-   teleport + dangling mass, compute per-block L1 delta and non-dangling
-   mass as COLUMNS; the global Σ|Δ| and Σ(rank·has_out) ride the eager
-   checkpoint as observed metrics — one shuffle of B rows + one action.
+1. gather over the cached ``(src_slot, dst_slot)`` slot-form: the source
+   block's ``(ranks / outdeg)[src_slot]`` is scattered into ONE partial
+   vector per destination block — B rows out per source block, B² rows per
+   iteration instead of one row per (block, dst). A pair whose edges cover
+   less than :data:`DENSE_OCCUPANCY` of the destination block's width
+   emits sparse (slots, vals) arrays instead — still one row per pair, so
+   the shuffle stays ≤ min(dense, sparse) at any block count, and bytes are
+   ≈ n·8 when dense: the order of the state itself, independent of m.
+2. update: reduce the partial vectors, apply teleport + dangling mass, and
+   compute the per-block L1 delta and non-dangling mass as columns; the
+   global Σ|Δ| and Σ(rank·has_out) ride the eager checkpoint as observed
+   metrics — one Spark action per iteration.
 
-Scale notes: state bytes per iteration are O(id-range) not O(m); the dense
-form assumes reasonably dense node ids (a compacting permutation — see
-``sources/ids.mint_dense_ids`` — is the standard preprocessing, exactly as
-WebGraph renumbers to 0..n-1). At B blocks the dense emission is B·range
-bytes per source block; the kernel switches per pair to sparse arrays below
-``dense_threshold`` occupancy, which keeps the shuffle ≤ min(dense, sparse)
-at any block count. The dangling/teleport term is a driver broadcast
-(north_star requirement), measured on the previous iteration's checkpoint
-via ``observe`` — one Spark action per iteration total.
+The dangling/teleport term is a driver broadcast measured on the previous
+iteration's state. The update rule is the one in
+:mod:`webgraph_spark.algo.pagerank`, with teleport and dangling mass spread
+uniformly over the teleport set: every node for :func:`pagerank_block`, the
+``sources`` for :func:`personalized_pagerank`. The slot-form costs 8
+bytes/edge of cache (two int32 per edge, shared with the CC and LPA
+kernels): the out-degree lives in the block state, not in the slot-form.
 """
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
-import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from webgraph_spark.plans.iterate import checkpoint_state
-
 from webgraph_spark.algo.pagerank import PageRankResult
-from webgraph_spark.plans.csr import CsrGraph, decode_block
-
-_STATE_SCHEMA = (
-    "block_id long, lo long, hi long, mask binary, has_out binary, "
-    "ranks binary, prev binary, block_delta double, block_nd double"
-)
+from webgraph_spark.plans.blockiter import BlockAlgo, run_block_fixpoint
+from webgraph_spark.plans.csr import CsrGraph
 
 _STRIDE = 6  # extrapolation stride: kills modes with lambda^6 = alpha^6
 
-_PARTIAL_SCHEMA = "dst_block long, slots array<long>, vals binary"
-
-_SLOTFORM_SCHEMA = (
-    "src_block long, dst_block long, dense boolean, "
-    "src_slot binary, deg binary, dst_idx binary, uniq_slots binary"
-)
+# a (src_block, dst_block) pair emits a dense partial vector when its edges
+# number at least this share of the destination block's width
+DENSE_OCCUPANCY = 0.05
 
 
-def _block_ranges(state_rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(block_ids, lo, hi) arrays for driver-side broadcast into kernels."""
-    bid = np.array([r["block_id"] for r in state_rows], dtype=np.int64)
-    lo = np.array([r["lo"] for r in state_rows], dtype=np.int64)
-    hi = np.array([r["hi"] for r in state_rows], dtype=np.int64)
-    order = np.argsort(bid)
-    return bid[order], lo[order], hi[order]
+def _source(v: dict) -> np.ndarray:
+    # only slots with out-arcs are ever gathered; the rest stay 0
+    return np.divide(
+        v["ranks"], v["outdeg"], out=np.zeros(v["ranks"].size),
+        where=v["outdeg"] > 0,
+    )
 
 
-def pagerank_block(
+def _combine(vals: np.ndarray, ds: np.ndarray, width: int):
+    if ds.size >= DENSE_OCCUPANCY * width:
+        return None, np.bincount(ds, weights=vals, minlength=width)[:width].tobytes()
+    # sparse pair: pre-combine duplicate destinations, emit (slots, vals)
+    uniq, inv = np.unique(ds, return_inverse=True)
+    return uniq.astype(np.int32).tobytes(), np.bincount(inv, weights=vals).tobytes()
+
+
+def _init(v: dict) -> dict:
+    return {
+        "block_delta": 0.0,
+        "block_nd": float((v["ranks"] * (v["outdeg"] > 0)).sum()),
+    }
+
+
+def _update_factory(alpha: float):
+    a_s = alpha ** _STRIDE
+
+    def update(v: dict, parts, params: dict) -> dict:
+        acc = np.zeros(v["mask"].size)
+        slots_col = parts.column("slots")
+        vals_col = parts.column("vals")
+        for i in range(parts.num_rows):
+            vals = np.frombuffer(vals_col[i].as_py(), dtype=np.float64)
+            if slots_col[i].is_valid:
+                slots = np.frombuffer(slots_col[i].as_py(), dtype=np.int32)
+                np.add.at(acc, slots, vals)
+            else:
+                acc += vals
+        new = v["mask"] * (v["tele"] * params["__base"] + alpha * acc)
+        if params["__extrap"]:
+            # A_{alpha^s} power extrapolation (stride s = 6; Kamvar et al.
+            # 2003 generalized): the Google matrix's subdominant spectrum
+            # has modulus <= alpha, with the bulk EXACTLY at alpha times a
+            # low-order root of unity (2-cycles, layered 3-cycles), so
+            #   x* = (x_k - alpha^s x_{k-s}) / (1 - alpha^s)
+            # annihilates every mode with lambda^s = alpha^s while scaling
+            # any other mode by |lambda^s - alpha^s|/(1 - alpha^s) <=
+            # 2 alpha^s/(1-alpha^s)  (~1.2 at alpha=.85, s=6) — it can slow
+            # an iteration slightly but can never diverge. The fixed point
+            # is unchanged and mass is preserved. x_{k-s} comes from the
+            # snapshot taken s iterations earlier via the __snap flag.
+            new = v["mask"] * ((new - a_s * v["prev"]) / (1.0 - a_s))
+        return {
+            "ranks": new,
+            "prev": new if params["__snap"] else v["prev"],
+            "block_delta": float(np.abs(new - v["ranks"]).sum()),
+            "block_nd": float((new * (v["outdeg"] > 0)).sum()),
+        }
+
+    return update
+
+
+def _pagerank(
     spark: SparkSession,
     csr: CsrGraph,
     nodes: DataFrame,
-    alpha: float = 0.85,
-    tol: float = 1e-9,
-    max_iter: int = 200,
-    dense_threshold: float = 0.05,
+    sources: DataFrame | None,
+    alpha: float,
+    tol: float,
+    max_iter: int,
     extrapolate: bool | int | None = None,
-    precompute_slots: bool = True,
     checkpointer=None,
     initial_state: DataFrame | None = None,
     start_iteration: int = 0,
+    initial_ranks: DataFrame | None = None,
 ) -> PageRankResult:
-    """CSR block-vector PageRank to convergence (L1 delta < tol).
-
-    ``extrapolate=True`` enables ADAPTIVE A_{alpha^6} power extrapolation
-    (Kamvar et al. 2003, generalized to stride 6): when the driver-observed
-    L1 contraction ratio sits at ~alpha (the error is dominated by modes of
-    modulus alpha — the real alpha mode plus the alpha·root-of-unity modes
-    of 2-/3-periodic link structure), a snapshot is armed and, six
-    iterations later, ``x* = (x_k − alpha^6 x_{k−6}) / (1 − alpha^6)``
-    annihilates all lambda^6 = alpha^6 modes in one linear shot. The
-    trigger matters: on fast-mixing graphs (ratio ≪ alpha) extrapolation
-    with a 6-stale iterate AMPLIFIES small modes by ~(alpha/λ)^6, so it
-    only fires while the measured ratio stays within 3% of alpha. The
-    fixed point is unchanged either way, and the L1 < tol stop criterion
-    still measures a genuine successive-iterate delta. Leave ``None`` for
-    fixed-iteration runs that must match a term-by-term oracle.
-
-    ``precompute_slots=True`` (default) decodes the CSR varint stream ONCE
-    into a cached slot-coordinate form — per (src_block, dst_block) pair:
-    edge-aligned int32 ``src_slot``/``deg`` arrays plus pre-uniqued sparse
-    destination indices — so every iteration's kernel is a pure
-    gather + divide + ``bincount`` with no varint decode, no searchsorted,
-    no ``np.unique``. Costs ~12 bytes/edge of cache (vs ~1-2 bytes/edge for
-    the varint CSR) — the classic memory-for-CPU trade; pass ``False`` on
-    memory-constrained clusters to re-decode per iteration. The per-edge
-    arithmetic (same edge order, same r/d division, same bincount
-    accumulation) is bitwise-identical between the two paths.
-    """
-    n = nodes.count()
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    blocks = (
-        csr.blocks.repartition(shuffle_parts, "block_id")
-        .sortWithinPartitions("block_id")
-        .persist()
-    )
-    blocks.count()
-
-    r0 = 1.0 / n
-
-    def init_kernel(key, pdf):
-        import pandas as pd
-
-        ids = pdf["id"].to_numpy(np.int64)
-        ho = pdf["__has_out"].to_numpy(np.float64)
-        lo, hi = int(ids.min()), int(ids.max())
-        width = hi - lo + 1
-        mask = np.zeros(width)
-        has_out = np.zeros(width)
-        mask[ids - lo] = 1.0
-        has_out[ids - lo] = ho
-        ranks = mask * r0
-        return pd.DataFrame(
-            {
-                "block_id": [int(key[0])],
-                "lo": [lo],
-                "hi": [hi],
-                "mask": [mask.tobytes()],
-                "has_out": [has_out.tobytes()],
-                "ranks": [ranks.tobytes()],
-                "prev": [np.zeros(width).tobytes()],
-                "block_delta": [0.0],
-                "block_nd": [float((ranks * has_out).sum())],
-            }
-        )
-
-    if initial_state is not None:
-        # resume: the checkpointed state frame IS the full kernel state —
-        # per-block rank/prev vectors plus the non-dangling mass column the
-        # next iteration's teleport term needs (no graph re-scan required)
-        state = initial_state.select(
-            "block_id", "lo", "hi", "mask", "has_out", "ranks", "prev",
-            "block_delta", "block_nd",
-        ).transform(checkpoint_state)
-        nd_row = state.agg(F.sum("block_nd").alias("nd")).collect()[0]
-        non_dangling = float(nd_row["nd"] or 0.0)
+    """The one PageRank engine; ``sources=None`` teleports to every node."""
+    outdeg = csr.blocks.select(
+        F.explode(F.arrays_zip("srcs", "degs")).alias("e")
+    ).select(F.col("e.srcs").alias("id"), F.col("e.degs").alias("outdeg"))
+    values = nodes.select("id").join(outdeg, "id", "left").na.fill({"outdeg": 0})
+    if sources is None:
+        n_tele = nodes.count()
+        values = values.withColumn("tele", F.lit(1))
     else:
-        srcs = blocks.select(F.explode("srcs").alias("id")).distinct()
-        n_src = srcs.count()
-        flagged = (
-            nodes.select("id")
-            .join(srcs.withColumn("__has_out", F.lit(1.0)), "id", "left")
-            .na.fill({"__has_out": 0.0})
-            .withColumn("block_id", csr.node_block_id_col("id"))
-        )
-        state = (
-            flagged.groupBy("block_id")
-            .applyInPandas(init_kernel, schema=_STATE_SCHEMA)
-            .transform(checkpoint_state)
-        )
-        non_dangling = None  # filled below once n_src is known
-    ranges = _block_ranges(state.select("block_id", "lo", "hi").collect())
-    rng_bid, rng_lo, rng_hi = ranges
-    cuts = np.asarray(csr.cuts, dtype=np.int64)
-    if non_dangling is None:
-        non_dangling = n_src / n
-
-    def spmv_kernel(blocks_tbl: "pa.Table", state_tbl: "pa.Table") -> "pa.Table":
-        out_dstb: list[int] = []
-        out_slots: list[object] = []
-        out_vals: list[bytes] = []
-        if state_tbl.num_rows:
-            lo = int(state_tbl.column("lo")[0].as_py())
-            rvec = np.frombuffer(
-                state_tbl.column("ranks")[0].as_py(), dtype=np.float64
-            )
-            srcs_col = blocks_tbl.column("srcs")
-            degs_col = blocks_tbl.column("degs")
-            succ_col = blocks_tbl.column("succ")
-            for i in range(blocks_tbl.num_rows):
-                srcs = np.asarray(srcs_col[i].values, dtype=np.int64)
-                degs = np.asarray(degs_col[i].values, dtype=np.int64)
-                srcs, indptr, succs = decode_block(
-                    srcs, degs, succ_col[i].as_py()
-                )
-                src_rank = rvec[srcs - lo]
-                d = np.diff(indptr)
-                per_edge = np.repeat(src_rank / d, d)
-                # split successors by destination block (succs sorted per
-                # list, not globally — searchsorted over the few cuts)
-                dblk = np.searchsorted(cuts, succs, side="left")
-                for b in np.unique(dblk):
-                    sel = dblk == b
-                    pos = int(np.searchsorted(rng_bid, b))
-                    if pos >= rng_bid.size or rng_bid[pos] != b:
-                        continue  # no real nodes in that block range
-                    blo, bhi = int(rng_lo[pos]), int(rng_hi[pos])
-                    width = bhi - blo + 1
-                    dsts = succs[sel] - blo
-                    vals = per_edge[sel]
-                    if dsts.size >= dense_threshold * width:
-                        acc = np.bincount(
-                            dsts, weights=vals, minlength=width
-                        )[:width]
-                        out_dstb.append(int(b))
-                        out_slots.append(None)
-                        out_vals.append(acc.tobytes())
-                    else:
-                        # sparse pair: pre-combine duplicates, emit arrays
-                        uniq, inv = np.unique(dsts, return_inverse=True)
-                        acc = np.bincount(inv, weights=vals)
-                        out_dstb.append(int(b))
-                        out_slots.append(uniq.tolist())
-                        out_vals.append(acc.tobytes())
-        return pa.table(
-            {
-                "dst_block": pa.array(out_dstb, pa.int64()),
-                "slots": pa.array(out_slots, pa.list_(pa.int64())),
-                "vals": pa.array(out_vals, pa.binary()),
-            }
-        )
-
-    slotform = None
-    if precompute_slots:
-        # reuse a previously built slot-form for the SAME layout: keyed by
-        # the shuffle width, density threshold, and the node-range layout
-        # (block ids + lo bounds) that slot coordinates are relative to.
-        # Typical pattern served: a fixed-iteration run followed by a
-        # run-to-convergence on one CsrGraph pays the decode+shuffle once.
-        cache_key = (
-            shuffle_parts,
-            float(dense_threshold),
-            rng_bid.tobytes(),
-            rng_lo.tobytes(),
-        )
-        cached = getattr(csr, "_slotform_cache", None)
-        if cached is not None and cached[0] == cache_key:
-            slotform = cached[1]
-            blocks.unpersist()  # the cached slot-form replaces it entirely
-
-    if precompute_slots and slotform is None:
-
-        def slotform_kernel(batches):
-            for batch in batches:
-                rows: dict[str, list] = {
-                    "src_block": [], "dst_block": [], "dense": [],
-                    "src_slot": [], "deg": [], "dst_idx": [], "uniq_slots": [],
-                }
-                bid_col = batch.column("block_id")
-                srcs_col = batch.column("srcs")
-                degs_col = batch.column("degs")
-                succ_col = batch.column("succ")
-                for i in range(batch.num_rows):
-                    srcs = np.asarray(srcs_col[i].values, dtype=np.int64)
-                    degs = np.asarray(degs_col[i].values, dtype=np.int64)
-                    srcs, indptr, succs = decode_block(
-                        srcs, degs, succ_col[i].as_py()
-                    )
-                    b_src = int(bid_col[i].as_py())
-                    pos = int(np.searchsorted(rng_bid, b_src))
-                    if pos >= rng_bid.size or rng_bid[pos] != b_src:
-                        continue  # block range holds no real nodes
-                    lo = int(rng_lo[pos])
-                    d = np.diff(indptr)
-                    src_slot = (np.repeat(srcs, d) - lo).astype(np.int32)
-                    degrep = np.repeat(d, d).astype(np.int32)
-                    dblk = np.searchsorted(cuts, succs, side="left")
-                    for b in np.unique(dblk):
-                        sel = dblk == b
-                        pos2 = int(np.searchsorted(rng_bid, b))
-                        if pos2 >= rng_bid.size or rng_bid[pos2] != b:
-                            continue
-                        blo = int(rng_lo[pos2])
-                        width = int(rng_hi[pos2]) - blo + 1
-                        dsts = succs[sel] - blo
-                        rows["src_block"].append(b_src)
-                        rows["dst_block"].append(int(b))
-                        rows["src_slot"].append(src_slot[sel].tobytes())
-                        rows["deg"].append(degrep[sel].tobytes())
-                        if dsts.size >= dense_threshold * width:
-                            rows["dense"].append(True)
-                            rows["dst_idx"].append(
-                                dsts.astype(np.int32).tobytes()
-                            )
-                            rows["uniq_slots"].append(b"")
-                        else:
-                            uniq, inv = np.unique(dsts, return_inverse=True)
-                            rows["dense"].append(False)
-                            rows["dst_idx"].append(
-                                inv.astype(np.int32).tobytes()
-                            )
-                            rows["uniq_slots"].append(
-                                uniq.astype(np.int32).tobytes()
-                            )
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "src_block": pa.array(rows["src_block"], pa.int64()),
-                        "dst_block": pa.array(rows["dst_block"], pa.int64()),
-                        "dense": pa.array(rows["dense"], pa.bool_()),
-                        "src_slot": pa.array(rows["src_slot"], pa.binary()),
-                        "deg": pa.array(rows["deg"], pa.binary()),
-                        "dst_idx": pa.array(rows["dst_idx"], pa.binary()),
-                        "uniq_slots": pa.array(rows["uniq_slots"], pa.binary()),
-                    }
-                )
-
-        slotform = (
-            blocks.mapInArrow(slotform_kernel, schema=_SLOTFORM_SCHEMA)
-            .repartition(shuffle_parts, "src_block")
-            .sortWithinPartitions("src_block")
-            .persist()
-        )
-        slotform.count()
-        blocks.unpersist()
-        csr._slotform_cache = (cache_key, slotform)
-
-    if precompute_slots:
-
-        def spmv_slots_kernel(
-            slot_tbl: "pa.Table", state_tbl: "pa.Table"
-        ) -> "pa.Table":
-            out_dstb: list[int] = []
-            out_slots: list[object] = []
-            out_vals: list[bytes] = []
-            if state_tbl.num_rows and slot_tbl.num_rows:
-                rvec = np.frombuffer(
-                    state_tbl.column("ranks")[0].as_py(), dtype=np.float64
-                )
-                dstb_col = slot_tbl.column("dst_block")
-                dense_col = slot_tbl.column("dense")
-                ss_col = slot_tbl.column("src_slot")
-                deg_col = slot_tbl.column("deg")
-                di_col = slot_tbl.column("dst_idx")
-                uq_col = slot_tbl.column("uniq_slots")
-                for i in range(slot_tbl.num_rows):
-                    ss = np.frombuffer(ss_col[i].as_py(), dtype=np.int32)
-                    dd = np.frombuffer(deg_col[i].as_py(), dtype=np.int32)
-                    vals = rvec[ss] / dd
-                    di = np.frombuffer(di_col[i].as_py(), dtype=np.int32)
-                    b = int(dstb_col[i].as_py())
-                    if dense_col[i].as_py():
-                        pos = int(np.searchsorted(rng_bid, b))
-                        width = int(rng_hi[pos]) - int(rng_lo[pos]) + 1
-                        acc = np.bincount(di, weights=vals, minlength=width)[
-                            :width
-                        ]
-                        out_dstb.append(b)
-                        out_slots.append(None)
-                        out_vals.append(acc.tobytes())
-                    else:
-                        uniq = np.frombuffer(
-                            uq_col[i].as_py(), dtype=np.int32
-                        ).astype(np.int64)
-                        acc = np.bincount(di, weights=vals, minlength=uniq.size)
-                        out_dstb.append(b)
-                        out_slots.append(uniq.tolist())
-                        out_vals.append(acc.tobytes())
-            return pa.table(
-                {
-                    "dst_block": pa.array(out_dstb, pa.int64()),
-                    "slots": pa.array(out_slots, pa.list_(pa.int64())),
-                    "vals": pa.array(out_vals, pa.binary()),
-                }
-            )
+        n_tele = sources.count()
+        values = values.join(
+            sources.select("id").withColumn("tele", F.lit(1)), "id", "left"
+        ).na.fill({"tele": 0})
+    values = values.withColumn("ranks", F.col("tele") / F.lit(n_tele))
+    algo = BlockAlgo(
+        vectors={"ranks": "float64", "tele": "int8", "outdeg": "int32",
+                 "prev": "float64"},
+        scalars={"block_delta": "double", "block_nd": "double"},
+        out="rank",
+        source=_source,
+        partials={"slots": "binary", "vals": "binary"},
+        combine=_combine,
+        update=_update_factory(alpha),
+        init=_init,
+        params=("__base", "__extrap", "__snap"),
+    )
 
     result = PageRankResult(ranks=None, iterations=start_iteration)
-    update_kernel = _update_kernel_factory(alpha)
     armed_at: int | None = None
-    for it in range(start_iteration, max_iter):
-        t0 = time.monotonic()
-        dangling = 1.0 - non_dangling
-        base = (1.0 - alpha) / n + alpha * dangling / n
 
-        if precompute_slots:
-            partials = (
-                slotform.groupby("src_block")
-                .cogroup(state.groupby("block_id"))
-                .applyInArrow(spmv_slots_kernel, schema=_PARTIAL_SCHEMA)
-            )
-        else:
-            partials = (
-                blocks.groupby("block_id")
-                .cogroup(state.groupby("block_id"))
-                .applyInArrow(spmv_kernel, schema=_PARTIAL_SCHEMA)
-            )
+    def before(it: int, metrics) -> dict:
+        nonlocal armed_at
+        dangling = 1.0 - float(metrics["block_nd"] or 0.0)
+        base = (1.0 - alpha) / n_tele + alpha * dangling / n_tele
         # adaptive A_{alpha^6}: arm a snapshot while the L1 contraction
         # ratio sits at ~alpha; fire the extrapolation exactly _STRIDE
-        # iterations later if it still does (see docstring)
+        # iterations later if it still does (see pagerank_block)
         d = result.deltas
         alpha_dominated = (
             len(d) >= 3
@@ -419,149 +176,89 @@ def pagerank_block(
             armed_at = it
         if armed_at is not None and it >= armed_at + _STRIDE:
             armed_at = None  # fired or gone stale — re-arm on next signal
-        obs = Observation()
-        # base (teleport + dangling term) and the extrapolation flags are
-        # broadcast as columns so the kernel function object is created
-        # ONCE — a fresh closure per iteration would re-pickle and
-        # re-register a new UDF every round
-        new_state = (
-            partials.groupby("dst_block")
-            .cogroup(
-                state.withColumn("__base", F.lit(base))
-                .withColumn("__extrap", F.lit(1 if do_extrap else 0))
-                .withColumn("__snap", F.lit(1 if do_snap else 0))
-                .groupby("block_id")
-            )
-            .applyInArrow(update_kernel, schema=_STATE_SCHEMA)
-            .observe(
-                obs,
-                F.sum("block_delta").alias("d"),
-                F.sum("block_nd").alias("nd"),
-            )
-            .transform(checkpoint_state)
-        )
-        agg = obs.get
-        delta = float(agg["d"] or 0.0)
-        non_dangling = float(agg["nd"] or 0.0)
-        state = new_state
+        return {"__base": base, "__extrap": int(do_extrap), "__snap": int(do_snap)}
+
+    def after(metrics) -> tuple[float, bool]:
+        delta = float(metrics["block_delta"] or 0.0)
         result.deltas.append(delta)
-        wall = time.monotonic() - t0
-        result.iter_seconds.append(wall)
-        result.iterations = it + 1
-        if checkpointer is not None:
-            # the B-row block-state frame is the checkpoint: tiny writes,
-            # per-BLOCK lineage rows (partition granularity = the unit the
-            # kernel computes in), and resume needs no graph re-scan
-            checkpointer.save_iteration(state, it + 1, wall_s=wall, delta=delta)
-        if delta < tol:
-            result.converged = True
-            break
+        return delta, delta < tol
 
-    def explode_kernel(batches):
-        for batch in batches:
-            for i in range(batch.num_rows):
-                lo = batch.column("lo")[i].as_py()
-                mask = np.frombuffer(
-                    batch.column("mask")[i].as_py(), dtype=np.float64
-                )
-                ranks = np.frombuffer(
-                    batch.column("ranks")[i].as_py(), dtype=np.float64
-                )
-                live = np.flatnonzero(mask > 0)
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "id": pa.array(live + lo, pa.int64()),
-                        "rank": pa.array(ranks[live], pa.float64()),
-                    }
-                )
-
-    # the slot-form stays persisted: it lives in csr._slotform_cache for the
-    # next run on this CsrGraph (dropped with the CsrGraph / session)
-    result.ranks = state.mapInArrow(explode_kernel, schema="id long, rank double")
+    run = run_block_fixpoint(
+        spark, csr, algo, values, max_iter, after, before,
+        initial=initial_ranks,
+        checkpointer=checkpointer,
+        initial_state=initial_state,
+        start_iteration=start_iteration,
+    )
+    result.ranks = run.values
+    result.iterations = run.iterations
+    result.iter_seconds = run.iter_seconds
+    result.converged = run.converged
     return result
 
 
-_ARROW_STATE = pa.schema(
-    [
-        ("block_id", pa.int64()),
-        ("lo", pa.int64()),
-        ("hi", pa.int64()),
-        ("mask", pa.binary()),
-        ("has_out", pa.binary()),
-        ("ranks", pa.binary()),
-        ("prev", pa.binary()),
-        ("block_delta", pa.float64()),
-        ("block_nd", pa.float64()),
-    ]
-)
+def pagerank_block(
+    spark: SparkSession,
+    csr: CsrGraph,
+    nodes: DataFrame,
+    alpha: float = 0.85,
+    tol: float = 1e-9,
+    max_iter: int = 200,
+    extrapolate: bool | int | None = None,
+    checkpointer=None,
+    initial_state: DataFrame | None = None,
+    start_iteration: int = 0,
+    initial_ranks: DataFrame | None = None,
+) -> PageRankResult:
+    """CSR block-vector PageRank to convergence (L1 delta < tol).
+
+    ``nodes`` is the full node table ``(id)`` (dangling nodes included); it
+    must cover every edge endpoint of ``csr``. ``checkpointer`` (optional
+    :class:`webgraph_spark.checkpoint.CheckpointManager`) persists the
+    per-iteration block state + lineage; resume passes a checkpointed state
+    frame as ``initial_state`` with its ``start_iteration``.
+    ``initial_ranks`` is an ``(id, rank)`` warm start (e.g. the converged
+    vector before a graph update); nodes it misses start at 1/n.
+
+    ``extrapolate=True`` enables ADAPTIVE A_{alpha^6} power extrapolation
+    (Kamvar et al. 2003, generalized to stride 6): when the driver-observed
+    L1 contraction ratio sits at ~alpha (the error is dominated by modes of
+    modulus alpha — the real alpha mode plus the alpha·root-of-unity modes
+    of 2-/3-periodic link structure), a snapshot is armed and, six
+    iterations later, ``x* = (x_k − alpha^6 x_{k−6}) / (1 − alpha^6)``
+    annihilates all lambda^6 = alpha^6 modes in one linear shot. The
+    trigger matters: on fast-mixing graphs (ratio ≪ alpha) extrapolation
+    with a 6-stale iterate AMPLIFIES small modes by ~(alpha/λ)^6, so it
+    only fires while the measured ratio stays within 3% of alpha. The
+    fixed point is unchanged either way, and the L1 < tol stop criterion
+    still measures a genuine successive-iterate delta. Leave ``None`` for
+    fixed-iteration runs that must match a term-by-term oracle.
+    """
+    return _pagerank(
+        spark, csr, nodes, None, alpha, tol, max_iter,
+        extrapolate=extrapolate,
+        checkpointer=checkpointer,
+        initial_state=initial_state,
+        start_iteration=start_iteration,
+        initial_ranks=initial_ranks,
+    )
 
 
-def _update_kernel_factory(alpha: float):
-    """One fixed kernel object for the whole run; per-iteration scalars
-    (the teleport+dangling ``base``) arrive via the ``__base`` column."""
+def personalized_pagerank(
+    spark: SparkSession,
+    csr: CsrGraph,
+    nodes: DataFrame,
+    sources: DataFrame,
+    alpha: float = 0.85,
+    tol: float = 1e-9,
+    max_iter: int = 200,
+) -> PageRankResult:
+    """Personalized PageRank: teleport (and dangling mass) goes to the
+    ``sources`` set uniformly instead of all nodes.
 
-    def update_kernel(parts_tbl: "pa.Table", state_tbl: "pa.Table") -> "pa.Table":
-        if state_tbl.num_rows == 0:
-            return pa.table(
-                {f.name: pa.array([], f.type) for f in _ARROW_STATE}
-            )
-        base = float(state_tbl.column("__base")[0].as_py())
-        lo = int(state_tbl.column("lo")[0].as_py())
-        hi = int(state_tbl.column("hi")[0].as_py())
-        width = hi - lo + 1
-        mask = np.frombuffer(
-            state_tbl.column("mask")[0].as_py(), dtype=np.float64
-        )
-        has_out = np.frombuffer(
-            state_tbl.column("has_out")[0].as_py(), dtype=np.float64
-        )
-        old = np.frombuffer(
-            state_tbl.column("ranks")[0].as_py(), dtype=np.float64
-        )
-        acc = np.zeros(width)
-        slots_col = parts_tbl.column("slots")
-        vals_col = parts_tbl.column("vals")
-        for i in range(parts_tbl.num_rows):
-            vals = np.frombuffer(vals_col[i].as_py(), dtype=np.float64)
-            if slots_col[i].is_valid:
-                slots = np.asarray(slots_col[i].values, dtype=np.int64)
-                np.add.at(acc, slots, vals)
-            else:
-                acc += vals
-        new = mask * (base + alpha * acc)
-        prev_col = state_tbl.column("prev")[0].as_py()
-        if int(state_tbl.column("__extrap")[0].as_py()):
-            # A_{alpha^s} power extrapolation (stride s = 6; Kamvar et al.
-            # 2003 generalized): the Google matrix's subdominant spectrum
-            # has modulus <= alpha, with the bulk EXACTLY at alpha times a
-            # low-order root of unity (2-cycles, layered 3-cycles), so
-            #   x* = (x_k - alpha^s x_{k-s}) / (1 - alpha^s)
-            # annihilates every mode with lambda^s = alpha^s while scaling
-            # any other mode by |lambda^s - alpha^s|/(1 - alpha^s) <=
-            # 2 alpha^s/(1-alpha^s)  (~1.2 at alpha=.85, s=6) — it can slow
-            # an iteration slightly but can never diverge. The fixed point
-            # is unchanged and mass is preserved. x_{k-s} comes from the
-            # snapshot taken s iterations earlier via the __snap flag.
-            prev = np.frombuffer(prev_col, dtype=np.float64)
-            a_s = alpha ** _STRIDE
-            new = mask * ((new - a_s * prev) / (1.0 - a_s))
-        prev_out = new.tobytes() if int(
-            state_tbl.column("__snap")[0].as_py()
-        ) else prev_col
-        delta = float(np.abs(new - old).sum())
-        nd = float((new * has_out).sum())
-        return pa.table(
-            {
-                "block_id": state_tbl.column("block_id"),
-                "lo": state_tbl.column("lo"),
-                "hi": state_tbl.column("hi"),
-                "mask": state_tbl.column("mask"),
-                "has_out": state_tbl.column("has_out"),
-                "ranks": pa.array([new.tobytes()], pa.binary()),
-                "prev": pa.array([prev_out], pa.binary()),
-                "block_delta": pa.array([delta], pa.float64()),
-                "block_nd": pa.array([nd], pa.float64()),
-            }
-        )
-
-    return update_kernel
+    No reference counterpart (the reference has no PageRank at all); the
+    standard PPR definition on the same block engine, with the teleport set
+    as an int8 vector in the state. Nodes outside the reachable set of
+    ``sources`` converge to rank 0.
+    """
+    return _pagerank(spark, csr, nodes, sources, alpha, tol, max_iter)

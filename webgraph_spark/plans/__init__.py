@@ -1,4 +1,5 @@
-"""Physical plan layer: CSR Arrow blocks, degree-balanced partitioning, salting.
+"""Physical plan layer: CSR Arrow blocks, degree-balanced partitioning, salting,
+and the block-fixpoint driver (``blockiter``) over the shared slot-form.
 
 The reference's physical layer is the BVGraph compressed adjacency file plus
 its work-splitting primitives (``splitNodeIterators``,

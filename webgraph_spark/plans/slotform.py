@@ -1,24 +1,25 @@
-"""Shared edge-aligned slot-form for block-vector fixpoint kernels.
+"""Shared edge-aligned slot-form for the block-vector fixpoint kernels.
 
-The block kernels (:mod:`webgraph_spark.algo.labelprop_block`,
-:mod:`webgraph_spark.algo.components_block`) keep their vertex state as one
-dense vector per CSR block and need, per (src_block, dst_block) pair, the
+The block kernels (PageRank, hash-min CC and label propagation, all run by
+:mod:`webgraph_spark.plans.blockiter`) keep their vertex state as one dense
+vector per CSR block and need, per (src_block, dst_block) pair, the
 edge-aligned ``(src_slot, dst_slot)`` int32 coordinate arrays — source and
 destination positions relative to each block's node-id range. Decoding the
 varint CSR into that form costs one pass; every iteration after that is a
 pure numpy gather + combine. This module builds it ONCE per CSR layout and
-caches it on the :class:`~webgraph_spark.plans.csr.CsrGraph` handle (same
-pattern as the PageRank kernel's weighted slot-form cache), so running LPA
-then CC on one symmetrized CSR pays the decode + shuffle a single time.
+caches it on the :class:`~webgraph_spark.plans.csr.CsrGraph` handle, so
+running LPA then CC on one symmetrized CSR, or a fixed-iteration PageRank
+then a converged one, pays the decode + shuffle a single time.
 
 Contract validated at build time: the state layout (derived from ``nodes``)
 must COVER every edge endpoint in the CSR — a slot outside its block's
 [lo, hi] range would wrap around the state vector and silently corrupt the
 gather, so the builder raises instead.
 
-Cache memory is ~8 bytes/edge (two int32 per edge) — the same memory-for-CPU
-trade the PageRank slot-form documents; it is dropped with the CsrGraph or
-via ``unpersist_pair_slotform``.
+Cache memory is ~8 bytes/edge (two int32 per edge), against ~1-2
+bytes/edge for the varint CSR — the memory-for-CPU trade that makes every
+iteration decode-free; it is dropped with the CsrGraph or via
+``unpersist_pair_slotform``.
 """
 
 from __future__ import annotations
@@ -41,64 +42,6 @@ def block_ranges(state_rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     hi = np.array([r["hi"] for r in state_rows], dtype=np.int64)
     order = np.argsort(bid)
     return bid[order], lo[order], hi[order]
-
-
-def make_init_kernel(vec_col: str, state_schema_cols: tuple[str, ...]):
-    """applyInPandas init kernel: per-block dense int64 state vector.
-
-    Input pdf columns: ``id`` plus ``__val`` (the node's initial value for
-    ``vec_col``). Gap slots (ids in [lo, hi] absent from the input) are
-    masked out and their vector cells left at 0 — every consumer filters on
-    the mask.
-    """
-
-    def init_kernel(key, pdf):
-        import pandas as pd
-
-        ids = pdf["id"].to_numpy(np.int64)
-        vals = pdf["__val"].to_numpy(np.int64)
-        lo, hi = int(ids.min()), int(ids.max())
-        width = hi - lo + 1
-        mask = np.zeros(width, dtype=np.int8)
-        vec = np.zeros(width, dtype=np.int64)
-        mask[ids - lo] = 1
-        vec[ids - lo] = vals
-        row = {
-            "block_id": [int(key[0])],
-            "lo": [lo],
-            "hi": [hi],
-            "mask": [mask.tobytes()],
-            vec_col: [vec.tobytes()],
-            "block_changed": [0],
-        }
-        return pd.DataFrame({c: row[c] for c in state_schema_cols})
-
-    return init_kernel
-
-
-def make_explode_kernel(vec_col: str, out_col: str):
-    """mapInArrow kernel: dense block state -> (id, out_col) rows for the
-    masked (live) slots."""
-
-    def explode_kernel(batches):
-        for batch in batches:
-            for i in range(batch.num_rows):
-                lo = batch.column("lo")[i].as_py()
-                mask = np.frombuffer(
-                    batch.column("mask")[i].as_py(), dtype=np.int8
-                )
-                vec = np.frombuffer(
-                    batch.column(vec_col)[i].as_py(), dtype=np.int64
-                )
-                live = np.flatnonzero(mask)
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "id": pa.array(live + lo, pa.int64()),
-                        out_col: pa.array(vec[live], pa.int64()),
-                    }
-                )
-
-    return explode_kernel
 
 
 def build_pair_slotform(

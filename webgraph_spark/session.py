@@ -36,19 +36,20 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` outside a cluster.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` outside a cluster
+    (the machine's core count when unset).
     ``shuffle_partitions`` defaults to the local core count so one wave of
     reduce tasks covers the machine (on a cluster: set via spark-submit).
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_MASTER" not in os.environ:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
         master = f"local[{cpus}]"
     if master is not None:
         builder = builder.master(master)
     if shuffle_partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
+        shuffle_partitions = int(cpus) if cpus.isdigit() else os.cpu_count()
     conf = dict(ENGINE_CONF)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     # local mode: the driver JVM IS the executor; size the heap for

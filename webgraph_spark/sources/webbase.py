@@ -142,6 +142,9 @@ def normalize_url2(col):
         has_port, F.regexp_extract(hostport, r"^([^:]*)", 1)
     ).otherwise(hostport)
     portstr = F.when(has_port, F.regexp_replace(hostport, r"^[^:]*:", ""))
+    # leading zeros first: parseInt accepts any number of them (":00000000443"
+    # is port 443), so only the significant digits face the length gate
+    portstr = F.regexp_replace(portstr, r"^0+(?=[0-9])", "")
     # ≤ 10 digits AND ≤ Integer.MAX_VALUE: Java's parseInt accepts any
     # int-range port (URL2 keeps e.g. :1234567890 in toString()); only a
     # genuine parseInt overflow (> 2147483647) reads as "no port"
